@@ -121,7 +121,7 @@ def load_all(spark: SparkSession, sf_dir: str,
 
 
 def register_views(spark: SparkSession, sf_dir: str,
-                   tables: list[str] | None = None) -> dict[str, DataFrame]:
+                   tables: list[str] | None = None) -> None:
     """Register each table as a temp view (the engine's 'catalog').
 
     Mirrors the reference's SPARQL-endpoint surface (SURVEY.md §1.2):
@@ -142,10 +142,11 @@ def register_views(spark: SparkSession, sf_dir: str,
     fixture name is NOT detectable this way (the name still exists,
     pointing at other data) — the engine's contract is that fixture
     view names belong to this registry (query-private views use '_'
-    prefixes); code that intentionally replaces one must call
-    ``invalidate_views`` first. Single-threaded per session by design,
-    like the SparkSession catalog API itself: concurrent builders
-    should derive per-thread sessions via ``spark.newSession()``."""
+    prefixes); code that intentionally points one at other data must
+    drop it again (``spark.catalog.dropTempView``) when done, so the
+    next call re-binds it. Single-threaded per session by design, like
+    the SparkSession catalog API itself: concurrent builders should
+    derive per-thread sessions via ``spark.newSession()``."""
     try:
         cache = spark._integrator_view_dirs
     except AttributeError:
@@ -154,27 +155,10 @@ def register_views(spark: SparkSession, sf_dir: str,
             spark._integrator_view_dirs = cache
         except Exception:
             pass
-    dfs = {}
     for name in (tables or TABLES):
         if cache.get(name) != sf_dir or not spark.catalog.tableExists(name):
-            dfs[name] = load_table(spark, sf_dir, name)
-            dfs[name].createOrReplaceTempView(name)
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
             cache[name] = sf_dir
-    return dfs
-
-
-def invalidate_views(spark: SparkSession,
-                     tables: list[str] | None = None) -> None:
-    """Drop the registry's memo for the given fixture view names (all
-    by default) so the next register_views re-binds them. Call this
-    before intentionally re-pointing a fixture-named temp view at other
-    data — the memo cannot detect a same-name replacement on its own
-    (see register_views)."""
-    cache = getattr(spark, "_integrator_view_dirs", None)
-    if cache is None:
-        return
-    for name in (tables or list(cache)):
-        cache.pop(name, None)
 
 
 def derived_dir(sf_dir: str, *parts: str) -> str:

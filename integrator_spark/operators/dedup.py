@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .ckpt import truncated_checkpoint
+from .knn import unit_rows
 
 from ..functions.text import word_shingles
 
@@ -1567,10 +1568,7 @@ def semantic_pairs_ivf(emb: DataFrame, threshold: float = 0.45,
                                  "cos_sim": pd.Series([], dtype="float64")})
         order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
         ids = pdf[id_col].to_numpy()[order]
-        v = np.array(pdf[vec_col].tolist(), dtype=np.float64)[order]
-        norms = np.linalg.norm(v, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        vn = v / norms
+        vn = unit_rows(pdf[vec_col])[order]
         chunk = max(1, chunk_cells // max(n, 1))
         outs_a, outs_b, outs_c = [], [], []
         for lo in range(0, n, chunk):

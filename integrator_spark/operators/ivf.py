@@ -33,10 +33,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .knn import _chunked_topk_rows, _collect_matrix
+from .knn import (_chunked_topk_rows, _collect_matrix, _window_topk,
+                  l2_normalize, unit_rows)
 
 
 def train_centroids(emb: DataFrame, n_clusters: int = 256,
@@ -103,7 +104,7 @@ def bounded_sample_matrix(emb: DataFrame, sample_rows: int,
     ``n_rows`` (a count the caller already has) skips the count pass."""
     n = emb.count() if n_rows is None else n_rows
     if n == 0:
-        raise ValueError("train_centroids: empty input DataFrame")
+        raise ValueError("bounded_sample_matrix: empty input DataFrame")
     every = max(1, -(-n // sample_rows))          # ceil: keeps <= sample_rows
     sample = emb.filter(F.col(id_col) % every == 0).select(id_col, vec_col)
     _ids, mat = _collect_matrix(sample, id_col, vec_col)  # normalized rows
@@ -124,8 +125,7 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray, n_assign: int = 1,
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-            sims = vn @ cent.T
+            sims = l2_normalize(v.copy()) @ cent.T
             if n_assign == 1:
                 buckets = sims.argmax(axis=1)[:, None]
             else:
@@ -176,8 +176,7 @@ def ivf_search(index: DataFrame, queries: DataFrame, centroids: np.ndarray,
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-            sims = vn @ cent.T
+            sims = l2_normalize(v.copy()) @ cent.T
             probes = np.argsort(-sims, axis=1)[:, :n_probe]
             reps = probes.shape[1]
             yield pd.DataFrame({
@@ -198,17 +197,10 @@ def ivf_search(index: DataFrame, queries: DataFrame, centroids: np.ndarray,
         index = index.filter(F.col("bucket").isin(bucket_ids))
 
     def bucket_topk(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame(columns=["query_id", "neighbor_id", "approx_cos"])
-        q_ids = q_pdf["query_id"].to_numpy()
-        c_ids = c_pdf[id_col].to_numpy()
-        q = np.array(q_pdf["_qv"].tolist(), dtype=np.float64)
-        c = np.array(c_pdf[vec_col].tolist(), dtype=np.float64)
-        q /= np.linalg.norm(q, axis=1, keepdims=True)
-        c /= np.linalg.norm(c, axis=1, keepdims=True)
-        rows = _chunked_topk_rows(q_ids, q, c_ids, c, k)
-        return pd.DataFrame(rows,
-                            columns=["query_id", "neighbor_id", "approx_cos"])
+        return _chunked_topk_rows(
+            q_pdf["query_id"].to_numpy(), unit_rows(q_pdf["_qv"]),
+            c_pdf[id_col].to_numpy(), unit_rows(c_pdf[vec_col]), k,
+            ("query_id", "neighbor_id", "approx_cos"))
 
     local = (probed.groupBy("bucket")
              .cogroup(index.groupBy("bucket"))
@@ -218,9 +210,4 @@ def ivf_search(index: DataFrame, queries: DataFrame, centroids: np.ndarray,
     # (query, neighbor) via several probed buckets — dedup before the
     # top-k window or k>1 would count one neighbor twice.
     local = local.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("approx_cos").desc(),
-                                               F.col("neighbor_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round("approx_cos", 6).alias("approx_cos")))
+    return _window_topk(local, "query_id", "approx_cos", k)

@@ -1,75 +1,45 @@
 """Exact k-nearest-neighbor (cosine) over an embedding column.
 
-Two physical strategies for the same logical operator (SURVEY.md §7 G2):
+One kernel, several physical plans around it (SURVEY.md §7 G2):
 
-1. ``knn_bruteforce`` — pure DataFrame: crossJoin + higher-order-
-   function cosine. Correct everywhere, O(n²) shuffle — the reference
-   plan for the oracle, and fine for small candidate sets.
-
-2. ``knn_blocked`` — Arrow-batched ``mapInPandas``: broadcast the
-   (normalized, float64) candidate matrix to every executor, then each
-   input batch does one numpy matmul against it. Same exact result,
-   but the O(n²) work runs as BLAS inside vectorized kernels with zero
-   shuffle (the only data movement is the broadcast).
-
-   100 TB posture: this broadcast-one-side pattern holds while the
-   candidate set fits in executor memory (~10⁶ × dim-64 ≈ 500 MB).
-   Beyond that, block BOTH sides: crossJoin the query blocks against
-   candidate block ids, matmul per (query-block × candidate-block)
-   pair, then a segmented top-k reduce per query id — or switch to the
-   approximate LSH/IVF path (see queries/vectors.py::vec_ann_lsh).
+- ``_chunked_topk_rows`` is the one exact top-k matmul kernel. Every
+  kernel-backed plan here and in operators/ivf.py calls it, so the
+  6-dp grid tie-break, the self-pair mask, the treatment of
+  non-finite sims and the sims-buffer budget are defined once.
+  ``_threshold_pairs`` is its threshold-scan sibling (all pairs with
+  cosine >= t) and shares the same chunked matmul loop.
+- ``unit_rows`` / ``l2_normalize`` are the one row-normalisation rule
+  of the vector family (knn, ivf, pq, dedup): a zero row stays zero.
+- Broadcast plans (``knn_blocked``, ``cosine_pairs_blocked``,
+  ``knn_search_broadcast``): ``_broadcast_scan`` collects one side
+  id-sorted and normalised (``_collect_matrix``), broadcasts it, and
+  runs the kernel once per Arrow batch of the other side. Zero
+  shuffle; valid while the collected side fits the broadcast budget
+  (~10⁶ × dim-64 ≈ 500 MB, ``MAX_BROADCAST_CELLS``).
+- Two-sided plans (``knn_blocked_twosided``, ``cosine_pairs_twosided``):
+  ``_cogroup_block_pairs`` hashes rows into blocks and runs the kernel
+  once per (query block × candidate block) pair — no row cross join,
+  no driver materialization. Top-k merges the per-pair winners with
+  one window.
+- ``knn_exact`` / ``cosine_pairs_exact`` pick a plan by size
+  (``_route_exact`` over the pure ``route_exact_plan``).
+- ``knn_bruteforce`` — pure DataFrame crossJoin + higher-order-function
+  cosine, O(n²) shuffle: the reference plan for the oracle, and fine
+  for small candidate sets. It does not use the kernel.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 KNN_SCHEMA = "vec_id long, neighbor_id long, cos_sim double"
-
-
-def _topk_idx(row: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
-    """Indices of the top-k sims in ``row``, ties broken by smallest id.
-
-    ``ids`` must be sorted ascending (callers pre-sort the candidate
-    matrix). Exactness under ties: argpartition alone picks an arbitrary
-    subset when equal sims straddle the k-th position, so we partition,
-    read the k-th value as a threshold, keep EVERY index at-or-above it,
-    and only then lexsort (-sim, id) — identical to the window spec
-    ``ORDER BY round(cos_sim, 6) DESC, neighbor_id`` used by
-    knn_bruteforce. Non-finite entries (the masked self-pair) are
-    dropped.
-
-    Selection happens on the 6-dp OUTPUT grid (``np.round(row, 6)``),
-    not on raw float64 sims: two bit-identical vectors scored by
-    *separate* BLAS calls (different block pairs, different batch
-    shapes) can disagree in the last ulp, which would flip the id
-    tie-break nondeterministically between physical plans. Real dedup
-    corpora are full of exact-duplicate vectors, so ties are the norm,
-    not the corner case; rounding first makes every exact strategy —
-    and the DuckDB oracles, which order by the same ROUND(..., 6) —
-    agree by construction (coarse-grid-over-noise discipline,
-    registry header).
-    """
-    row = np.round(row, 6)
-    finite = np.isfinite(row)
-    kk = min(k, int(finite.sum()))
-    if kk <= 0:
-        return np.empty(0, dtype=np.int64)
-    masked = np.where(finite, row, -np.inf)
-    if kk < masked.size:
-        part = np.argpartition(-masked, kk - 1)
-        thresh = masked[part[kk - 1]]
-        cand = np.nonzero(finite & (masked >= thresh))[0]
-    else:
-        cand = np.nonzero(finite)[0]
-    order = cand[np.lexsort((ids[cand], -masked[cand]))]
-    return order[:kk]
-
+PAIRS_SCHEMA = "id_a long, id_b long, cos_sim double"
 
 #: Per-task sims-buffer budget (cells): the q-chunk × |candidates|
 #: similarity matrix a blocked kernel materializes at once. 8M float64
@@ -77,6 +47,35 @@ def _topk_idx(row: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
 #: 10k-row Arrow batch would need an 80 GB sims buffer, so every matmul
 #: kernel iterates q in chunks of MAX_SIMS_CELLS // n_candidates rows.
 MAX_SIMS_CELLS = 8_000_000
+
+
+def l2_normalize(mat: np.ndarray) -> np.ndarray:
+    """Row-L2-normalize a float64 matrix in place and return it.
+
+    A zero row stays zero (cosine 0 with everything) instead of turning
+    into NaN: the one normalisation rule of the vector family, and the
+    only one that keeps pq's integer ADC quantization finite."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    mat /= norms
+    return mat
+
+
+def unit_rows(vecs: pd.Series) -> np.ndarray:
+    """Decode one batch of an array column into a row-L2-normalized
+    float64 matrix (see ``l2_normalize``); an empty batch is (0, 0)."""
+    if len(vecs) == 0:
+        return np.empty((0, 0), dtype=np.float64)
+    return l2_normalize(np.array(vecs.tolist(), dtype=np.float64))
+
+
+def _by_id(ids: np.ndarray, mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, mat) reordered ascending by id; already-sorted input is
+    returned as is (one O(n) check, no copy)."""
+    if len(ids) > 1 and not (ids[1:] >= ids[:-1]).all():
+        order = np.argsort(ids, kind="stable")
+        return ids[order], mat[order]
+    return ids, mat
 
 
 def _q_chunks(n_rows: int, n_cand: int):
@@ -87,35 +86,119 @@ def _q_chunks(n_rows: int, n_cand: int):
         yield lo, min(lo + step, n_rows)
 
 
-def _chunked_topk_rows(q_ids: np.ndarray, q: np.ndarray,
-                       c_ids: np.ndarray, c: np.ndarray,
-                       k: int) -> list[tuple[int, int, float]]:
-    """The one exact top-k matmul kernel behind every blocked plan
-    (knn_search_broadcast batches, two-sided block pairs, IVF buckets):
-    stable-sorts candidates by id (ties resolve to the smallest id,
-    matching the SQL window spec), iterates the query side in
-    sims-budget chunks, masks exact id matches (self-pairs) to -inf,
-    and returns (query_id, candidate_id, sim) tuples. Both matrices
-    must be row-L2-normalized. Centralized so the tie-break and buffer
-    budget can never drift between physical plans.
+def _sim_chunks(q_ids: np.ndarray, q: np.ndarray, c: np.ndarray):
+    """Yield (query-id slice, q-chunk × candidates cosine matrix) under
+    the sims budget; nothing when either side is empty."""
+    if len(c) == 0:
+        return
+    for lo, hi in _q_chunks(len(q_ids), len(c)):
+        yield q_ids[lo:hi], q[lo:hi] @ c.T
 
-    Sims are snapped to the 6-dp output grid BEFORE selection (see
-    ``_topk_idx``) so the local winners this kernel emits — later
-    merged by a plain ``ORDER BY cos_sim DESC, id`` window across
-    blocks/batches — carry grid values: the cross-call ulp noise that
-    would otherwise make the merge's tie-break nondeterministic is
-    gone by the time rows leave the task."""
-    order = np.argsort(c_ids, kind="stable")
-    c_ids, c = c_ids[order], c[order]
-    rows: list[tuple[int, int, float]] = []
-    for lo, hi in _q_chunks(len(q_ids), len(c_ids)):
-        sims = np.round(q[lo:hi] @ c.T, 6)
-        sims[q_ids[lo:hi, None] == c_ids[None, :]] = -np.inf
-        for r in range(sims.shape[0]):
-            rows.extend(
-                (int(q_ids[lo + r]), int(c_ids[j]), float(sims[r, j]))
-                for j in _topk_idx(sims[r], c_ids, k))
-    return rows
+
+def _rows_frame(cols: tuple[str, str, str], parts: list) -> pd.DataFrame:
+    """(id, id, sim) frame from a list of per-chunk array triples."""
+    if parts:
+        a, b, s = (np.concatenate(x) for x in zip(*parts))
+    else:
+        a = b = np.empty(0, dtype=np.int64)
+        s = np.empty(0, dtype=np.float64)
+    return pd.DataFrame({cols[0]: a.astype(np.int64),
+                         cols[1]: b.astype(np.int64),
+                         cols[2]: s.astype(np.float64)})
+
+
+def _topk_cells(sims: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row, column) indices of each row's top-k by (sim DESC, column
+    ASC), -inf cells excluded; rows with no finite cell yield nothing.
+    Requires 1 <= k <= sims.shape[1].
+
+    Exact under ties: a row's k-th largest value is the threshold and
+    EVERY cell at or above it is a candidate before the (row, -sim,
+    column) sort truncates to k — argpartition alone would pick an
+    arbitrary subset when equal sims straddle the k-th position. k = 1
+    is one row-wise argmax (the first maximum is the smallest column)."""
+    if k == 1:
+        j = sims.argmax(axis=1)
+        r = np.nonzero(sims[np.arange(len(j)), j] > -np.inf)[0]
+        return r, j[r]
+    width = sims.shape[1]
+    kth = np.partition(sims, width - k, axis=1)[:, width - k, None]
+    r, j = np.nonzero((sims >= kth) & (sims > -np.inf))
+    order = np.lexsort((j, -sims[r, j], r))
+    r, j = r[order], j[order]
+    keep = np.arange(len(r)) - np.searchsorted(r, r) < k
+    return r[keep], j[keep]
+
+
+def _chunked_topk_rows(q_ids: np.ndarray, q: np.ndarray,
+                       c_ids: np.ndarray, c: np.ndarray, k: int,
+                       cols: tuple[str, str, str] = ("vec_id", "neighbor_id",
+                                                     "cos_sim")
+                       ) -> pd.DataFrame:
+    """The one exact top-k matmul kernel behind every kernel-backed
+    plan (knn_blocked and knn_search_broadcast batches, two-sided block
+    pairs, IVF buckets). Both matrices must be row-L2-normalized.
+
+    Candidates are put in ascending id order (a no-op for the
+    broadcast side, which ``_collect_matrix`` already sorted), so the
+    first column among equal sims is the smallest id — the SQL window's
+    ``ORDER BY cos_sim DESC, neighbor_id`` tie-break. The query side is
+    scored in sims-budget chunks; per chunk the sims are snapped to the
+    6-dp output grid, non-finite sims and exact id matches (self-pairs)
+    become -inf, and ``_topk_cells`` selects. A query with no finite
+    candidate emits nothing. Returns a (query id, candidate id, sim)
+    frame named by ``cols``.
+
+    Selection happens on the 6-dp grid, not on raw float64 sims: two
+    bit-identical vectors scored by separate BLAS calls (different
+    block pairs, different batch shapes) can disagree in the last ulp,
+    which would flip the id tie-break between physical plans. Real
+    dedup corpora are full of exact-duplicate vectors, so ties are the
+    norm; rounding first makes every exact plan — and the DuckDB
+    oracles, which order by the same ROUND(..., 6) — agree by
+    construction, and the local winners merged later by a plain
+    ``ORDER BY cos_sim DESC, id`` window already carry grid values."""
+    c_ids, c = _by_id(c_ids, c)
+    kk = min(k, len(c_ids))
+    parts = []
+    for ids, sims in (_sim_chunks(q_ids, q, c) if kk > 0 else ()):
+        sims = np.round(sims, 6)
+        sims[~np.isfinite(sims) | (ids[:, None] == c_ids[None, :])] = -np.inf
+        r, j = _topk_cells(sims, kk)
+        parts.append((ids[r], c_ids[j], sims[r, j]))
+    return _rows_frame(cols, parts)
+
+
+def _threshold_pairs(q_ids: np.ndarray, q: np.ndarray,
+                     c_ids: np.ndarray, c: np.ndarray, threshold: float,
+                     same_rows: bool) -> pd.DataFrame:
+    """All (query, candidate) pairs with cosine >= threshold, emitted
+    once as (smaller id, larger id, sim rounded to 6 dp). Both matrices
+    must be row-L2-normalized. ``same_rows`` says both sides hold the
+    same row set (a broadcast scan, a diagonal block pair): only
+    q_id < c_id is kept, which drops self-pairs and mirrored
+    duplicates."""
+    parts = []
+    for ids, sims in _sim_chunks(q_ids, q, c):
+        keep = sims >= threshold
+        if same_rows:
+            keep &= ids[:, None] < c_ids[None, :]
+        r, j = np.nonzero(keep)
+        parts.append((np.minimum(ids[r], c_ids[j]),
+                      np.maximum(ids[r], c_ids[j]),
+                      np.round(sims[r, j], 6)))
+    return _rows_frame(("id_a", "id_b", "cos_sim"), parts)
+
+
+def _window_topk(local: DataFrame, q_col: str, sim_col: str,
+                 k: int) -> DataFrame:
+    """Reduce local (per batch / block / bucket) winners to the global
+    top-k per ``q_col`` by (sim DESC, neighbor_id ASC)."""
+    w = Window.partitionBy(q_col).orderBy(F.col(sim_col).desc(),
+                                          F.col("neighbor_id"))
+    return (local.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+            .select(q_col, "neighbor_id", F.round(sim_col, 6).alias(sim_col)))
 
 
 def _dot_expr(a, b):
@@ -170,7 +253,8 @@ def knn_bruteforce(emb: DataFrame, id_col: str = "vec_id",
 
 
 def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
-    """Materialize (ids, L2-normalized float64 matrix) for broadcast.
+    """Materialize (ids, L2-normalized float64 matrix) for broadcast,
+    sorted ascending by id — the one sort the broadcast side ever gets.
 
     Arrow-batched: ``toArrow()`` streams executor-serialized Arrow
     record batches to the driver (no row pickling, no pandas object
@@ -192,47 +276,39 @@ def _collect_matrix(emb: DataFrame, id_col: str, vec_col: str):
         raise ValueError("ragged embedding column")
     flat = vecs.flatten().to_numpy(zero_copy_only=False)
     mat = flat.astype(np.float64).reshape(len(ids), dim)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    return ids, mat
+    return _by_id(ids, l2_normalize(mat))
+
+
+def _broadcast_scan(streamed: DataFrame, collected: DataFrame,
+                    id_col: str, vec_col: str,
+                    kernel: Callable[..., pd.DataFrame],
+                    schema: str) -> DataFrame:
+    """Collect ``collected`` once (``_collect_matrix``), broadcast it,
+    and call ``kernel(batch_ids, batch_rows, bc_ids, bc_rows)`` on every
+    Arrow batch of ``streamed`` (rows normalized by ``unit_rows``). The
+    zero-shuffle plan behind knn_blocked / cosine_pairs_blocked (both
+    sides are the same frame) and knn_search_broadcast (queries
+    collected, corpus streamed)."""
+    spark = streamed.sparkSession
+    bc = spark.sparkContext.broadcast(
+        _collect_matrix(collected, id_col, vec_col))
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bc_ids, bc_rows = bc.value
+        for pdf in batches:
+            yield kernel(pdf[id_col].to_numpy(), unit_rows(pdf[vec_col]),
+                         bc_ids, bc_rows)
+
+    return streamed.select(id_col, vec_col).mapInPandas(scan, schema)
 
 
 def knn_blocked(emb: DataFrame, id_col: str = "vec_id",
                 vec_col: str = "embedding", k: int = 1) -> DataFrame:
     """Exact top-k via broadcast matrix + per-batch numpy matmul."""
-    spark = emb.sparkSession
-    ids, mat = _collect_matrix(emb, id_col, vec_col)
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    def topk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand_ids, cand = bc.value
-        # Stable order: ties in similarity resolve to the smallest id.
-        order = np.lexsort((cand_ids,))
-        cand_ids, cand = cand_ids[order], cand[order]
-        for pdf in batches:
-            all_ids = pdf[id_col].to_numpy()
-            all_q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            all_q /= np.linalg.norm(all_q, axis=1, keepdims=True)
-            out_rows = []
-            for lo, hi in _q_chunks(len(all_ids), len(cand_ids)):
-                q_ids, q = all_ids[lo:hi], all_q[lo:hi]
-                # Grid-before-select, same as _chunked_topk_rows.
-                sims = np.round(q @ cand.T, 6)            # [chunk, n_cand]
-                self_mask = q_ids[:, None] == cand_ids[None, :]
-                sims[self_mask] = -np.inf
-                for r in range(sims.shape[0]):
-                    row = sims[r]
-                    if k == 1:
-                        j = int(row.argmax())             # first max = smallest id
-                        out_rows.append((int(q_ids[r]), int(cand_ids[j]),
-                                         round(float(row[j]), 6)))
-                    else:
-                        out_rows.extend((int(q_ids[r]), int(cand_ids[j]),
-                                         round(float(row[j]), 6))
-                                        for j in _topk_idx(row, cand_ids, k))
-            yield pd.DataFrame(out_rows,
-                               columns=["vec_id", "neighbor_id", "cos_sim"])
-
-    return emb.select(id_col, vec_col).mapInPandas(topk_batches, KNN_SCHEMA)
+    return _broadcast_scan(
+        emb, emb, id_col, vec_col,
+        lambda q_ids, q, c_ids, c: _chunked_topk_rows(q_ids, q, c_ids, c, k),
+        KNN_SCHEMA)
 
 
 #: Broadcast-plan ceiling: candidate cells (rows x dims) the driver may
@@ -260,14 +336,26 @@ def route_exact_plan(n: int, dim: int,
     parallelism; the budget term is the floor, the parallelism term
     only ever raises it.
     """
-    import math
-
     if n * dim <= max_broadcast_cells:
         return ("broadcast", 1)
     n_blocks = max(2,
                    math.ceil(n * dim / max_broadcast_cells),
                    math.ceil(math.sqrt(max(1, min_tasks))))
     return ("twosided", n_blocks)
+
+
+def _route_exact(emb: DataFrame, vec_col: str, max_broadcast_cells: int,
+                 est_cells: int | None) -> tuple[str, int]:
+    """``route_exact_plan`` on a size estimate: a metadata ``est_cells``
+    under budget routes to broadcast with no job; otherwise one cheap
+    count + dim aggregate supplies n and dim."""
+    if est_cells is not None and est_cells <= max_broadcast_cells:
+        return ("broadcast", 1)
+    stats = emb.agg(F.count(F.lit(1)).alias("n"),
+                    F.first(F.size(F.col(vec_col))).alias("dim")).first()
+    return route_exact_plan(
+        int(stats["n"] or 0), int(stats["dim"] or 0), max_broadcast_cells,
+        min_tasks=emb.sparkSession.sparkContext.defaultParallelism)
 
 
 def knn_exact(emb: DataFrame, id_col: str = "vec_id",
@@ -279,23 +367,16 @@ def knn_exact(emb: DataFrame, id_col: str = "vec_id",
     Routes on a size estimate: below ``max_broadcast_cells`` the
     broadcast matmul plan (zero exchanges); above it, the two-sided
     blocked plan with ``n_blocks`` sized so a single candidate block
-    stays under the broadcast budget. All three exact strategies are
-    bit-identical, so routing is purely physical — the 100 TB corpus
-    takes the cogrouped path without the driver ever materializing the
-    matrix.
+    stays under the broadcast budget. Both plans run the same kernel,
+    so routing is purely physical — the 100 TB corpus takes the
+    cogrouped path without the driver ever materializing the matrix.
 
     ``est_cells`` (rows × dims) lets callers route from metadata (e.g.
     source parquet bytes / 4) without running any job; when omitted, a
     cheap count+dim aggregate provides the estimate.
     """
-    if est_cells is not None and est_cells <= max_broadcast_cells:
-        return knn_blocked(emb, id_col, vec_col, k)
-    stats = emb.agg(F.count(F.lit(1)).alias("n"),
-                    F.first(F.size(F.col(vec_col))).alias("dim")).first()
-    n, dim = int(stats["n"] or 0), int(stats["dim"] or 0)
-    plan, n_blocks = route_exact_plan(
-        n, dim, max_broadcast_cells,
-        min_tasks=emb.sparkSession.sparkContext.defaultParallelism)
+    plan, n_blocks = _route_exact(emb, vec_col, max_broadcast_cells,
+                                  est_cells)
     if plan == "broadcast":
         return knn_blocked(emb, id_col, vec_col, k)
     return knn_blocked_twosided(emb, id_col, vec_col, k, n_blocks=n_blocks)
@@ -305,30 +386,54 @@ def cosine_pairs_blocked(emb: DataFrame, threshold: float,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:
     """All (a < b) pairs with cosine >= threshold — the embedding
-    near-duplicate detector, same broadcast-matmul plan as knn_blocked."""
+    near-duplicate detector, same broadcast scan as knn_blocked."""
+    return _broadcast_scan(
+        emb, emb, id_col, vec_col,
+        lambda q_ids, q, c_ids, c: _threshold_pairs(q_ids, q, c_ids, c,
+                                                    threshold, True),
+        PAIRS_SCHEMA)
+
+
+def _cogroup_block_pairs(emb: DataFrame, id_col: str, vec_col: str,
+                         n_blocks: int, unordered: bool,
+                         kernel: Callable[..., pd.DataFrame],
+                         schema: str) -> DataFrame:
+    """The two-sided plan: hash rows into ``n_blocks`` deterministic
+    blocks, cogroup block pairs (a bounded *block-id* cross join, never
+    a row cross join) and call ``kernel(q_ids, q, c_ids, c, same_rows)``
+    once per pair on normalized rows; ``same_rows`` is True on the
+    diagonal (qb == cb). Ordered pairs (all n_blocks²) serve top-k,
+    where every query block must meet every candidate block; unordered
+    pairs (qb <= cb, B(B+1)/2 — half the work) serve symmetric pair
+    scans, where a pair {x, y} lives in exactly one block pair. No
+    driver materialization; shuffle volume is ~n_blocks× the data
+    (each side replicated across its pairings), traded against
+    per-task memory of |block_q| × |block_c| similarities."""
     spark = emb.sparkSession
-    ids, mat = _collect_matrix(emb, id_col, vec_col)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    base = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
+                      F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("_blk"))
+    pairs = (spark.range(n_blocks).selectExpr("id AS _qb")
+             .crossJoin(spark.range(n_blocks).selectExpr("id AS _cb")))
+    if unordered:
+        pairs = pairs.filter(F.col("_qb") <= F.col("_cb"))
 
-    def pair_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand_ids, cand = bc.value
-        for pdf in batches:
-            all_ids = pdf[id_col].to_numpy()
-            all_q = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            all_q /= np.linalg.norm(all_q, axis=1, keepdims=True)
-            for lo, hi in _q_chunks(len(all_ids), len(cand_ids)):
-                q_ids, q = all_ids[lo:hi], all_q[lo:hi]
-                sims = q @ cand.T
-                keep = (sims >= threshold) & (q_ids[:, None] < cand_ids[None, :])
-                r, c = np.nonzero(keep)
-                yield pd.DataFrame({
-                    "id_a": q_ids[r].astype(np.int64),
-                    "id_b": cand_ids[c].astype(np.int64),
-                    "cos_sim": np.round(sims[r, c], 6),
-                })
+    def side(blk_col: str) -> DataFrame:
+        # Fresh aliases per side: both sides share one lineage, and
+        # cogroup rejects a self-join's ambiguous attributes.
+        return (base.join(pairs, F.col("_blk") == F.col(blk_col))
+                .select(*(F.col(c).alias(c)
+                          for c in ("_id", "_v", "_qb", "_cb"))))
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        pair_batches, "id_a long, id_b long, cos_sim double")
+    def block_pair(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
+        same_rows = (bool(len(q_pdf))
+                     and q_pdf["_qb"].iat[0] == q_pdf["_cb"].iat[0])
+        return kernel(q_pdf["_id"].to_numpy(), unit_rows(q_pdf["_v"]),
+                      c_pdf["_id"].to_numpy(), unit_rows(c_pdf["_v"]),
+                      same_rows)
+
+    return (side("_qb").groupBy("_qb", "_cb")
+            .cogroup(side("_cb").groupBy("_qb", "_cb"))
+            .applyInPandas(block_pair, schema))
 
 
 def cosine_pairs_twosided(emb: DataFrame, threshold: float,
@@ -337,65 +442,14 @@ def cosine_pairs_twosided(emb: DataFrame, threshold: float,
                           n_blocks: int = 4) -> DataFrame:
     """All (a < b) pairs with cosine >= threshold when the matrix does
     NOT fit on the driver/executors — the scale path behind
-    ``cosine_pairs_exact``.
-
-    Plan: hash rows into ``n_blocks`` deterministic blocks and cogroup
-    each UNORDERED block pair (qb <= cb — B(B+1)/2 pairs, half the
-    work of the ordered pairing) via applyInPandas; one numpy matmul
-    per pair emits the above-threshold hits. A pair {x, y} lives in
-    exactly one unordered block pair, so emitting (min_id, max_id)
-    yields each pair once; the diagonal block (qb == cb) filters
-    q_id < c_id. No row-level cross join, no driver materialization —
-    shuffle volume is ~n_blocks× the data.
-    """
-    spark = emb.sparkSession
-    base = emb.select(F.col(id_col).alias("vec_id"),
-                      F.col(vec_col).alias("_v"),
-                      F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("_blk"))
-    bp = (spark.range(n_blocks).selectExpr("id AS _qb")
-          .crossJoin(spark.range(n_blocks).selectExpr("id AS _cb"))
-          .filter(F.col("_qb") <= F.col("_cb")))
-    q_side = (base.join(bp, F.col("_blk") == F.col("_qb"))
-              .select("vec_id", "_v", "_qb", "_cb"))
-    c_side = (base.join(bp.withColumnRenamed("_qb", "_qb2")
-                          .withColumnRenamed("_cb", "_cb2"),
-                        F.col("_blk") == F.col("_cb2"))
-              .select(F.col("vec_id").alias("nbr_id"), F.col("_v").alias("_cv"),
-                      F.col("_qb2").alias("_qb"), F.col("_cb2").alias("_cb")))
-
-    def block_pairs(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": pd.Series(dtype=np.int64),
-                              "id_b": pd.Series(dtype=np.int64),
-                              "cos_sim": pd.Series(dtype=np.float64)})
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return empty
-        all_qids = q_pdf["vec_id"].to_numpy()
-        c_ids = c_pdf["nbr_id"].to_numpy()
-        all_q = np.array(q_pdf["_v"].tolist(), dtype=np.float64)
-        c = np.array(c_pdf["_cv"].tolist(), dtype=np.float64)
-        all_q /= np.linalg.norm(all_q, axis=1, keepdims=True)
-        c /= np.linalg.norm(c, axis=1, keepdims=True)
-        diagonal = q_pdf["_qb"].iat[0] == q_pdf["_cb"].iat[0]
-        outs = []
-        for b0, b1 in _q_chunks(len(all_qids), len(c_ids)):
-            q_ids, q = all_qids[b0:b1], all_q[b0:b1]
-            sims = q @ c.T
-            keep = sims >= threshold
-            if diagonal:
-                # diagonal block: both sides are the same set — dedup + no self
-                keep &= q_ids[:, None] < c_ids[None, :]
-            r, idx = np.nonzero(keep)
-            lo = np.minimum(q_ids[r], c_ids[idx])
-            hi = np.maximum(q_ids[r], c_ids[idx])
-            outs.append(pd.DataFrame({"id_a": lo.astype(np.int64),
-                                      "id_b": hi.astype(np.int64),
-                                      "cos_sim": np.round(sims[r, idx], 6)}))
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    return (q_side.groupBy("_qb", "_cb")
-            .cogroup(c_side.groupBy("_qb", "_cb"))
-            .applyInPandas(lambda ql, cl: block_pairs(ql, cl),
-                           "id_a long, id_b long, cos_sim double"))
+    ``cosine_pairs_exact``: ``_cogroup_block_pairs`` over UNORDERED
+    block pairs, one threshold scan per pair emitting (min_id, max_id)
+    so each pair appears once."""
+    return _cogroup_block_pairs(
+        emb, id_col, vec_col, n_blocks, True,
+        lambda q_ids, q, c_ids, c, same_rows: _threshold_pairs(
+            q_ids, q, c_ids, c, threshold, same_rows),
+        PAIRS_SCHEMA)
 
 
 def cosine_pairs_exact(emb: DataFrame, threshold: float,
@@ -407,14 +461,8 @@ def cosine_pairs_exact(emb: DataFrame, threshold: float,
     broadcast matmul (``cosine_pairs_blocked``); above it, the
     two-sided cogrouped block plan — never an unconditional full-matrix
     collect (the round-3 verdict's one scale-killer)."""
-    if est_cells is not None and est_cells <= max_broadcast_cells:
-        return cosine_pairs_blocked(emb, threshold, id_col, vec_col)
-    stats = emb.agg(F.count(F.lit(1)).alias("n"),
-                    F.first(F.size(F.col(vec_col))).alias("dim")).first()
-    n, dim = int(stats["n"] or 0), int(stats["dim"] or 0)
-    plan, n_blocks = route_exact_plan(
-        n, dim, max_broadcast_cells,
-        min_tasks=emb.sparkSession.sparkContext.defaultParallelism)
+    plan, n_blocks = _route_exact(emb, vec_col, max_broadcast_cells,
+                                  est_cells)
     if plan == "broadcast":
         return cosine_pairs_blocked(emb, threshold, id_col, vec_col)
     return cosine_pairs_twosided(emb, threshold, id_col, vec_col,
@@ -432,91 +480,34 @@ def knn_search_broadcast(corpus: DataFrame, queries: DataFrame,
     |Q| × k × n_batches rows. The corpus is never collected, never
     shuffled — the scan parallelism is the file split count, so this is
     the plan that serves "find the neighbors of these 1000 vectors in
-    the 100 TB corpus". Exact, same tie-break (sim desc, smallest id)
-    as every other exact plan here.
+    the 100 TB corpus". Exact, same kernel and tie-break (sim desc,
+    smallest id) as every other exact plan here.
 
     Output columns: query_id, neighbor_id, cos_sim.
     """
-    spark = corpus.sparkSession
-    q_ids, q_mat = _collect_matrix(queries, id_col, vec_col)
-    order = np.lexsort((q_ids,))
-    bc = spark.sparkContext.broadcast((q_ids[order], q_mat[order]))
-
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, qm = bc.value
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy()
-            c = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True)
-            # queries are the small side: the kernel chunks THEM
-            rows = _chunked_topk_rows(qi, qm, c_ids, c, k)
-            yield pd.DataFrame(rows,
-                               columns=["query_id", "neighbor_id", "cos_sim"])
-
-    local = corpus.select(id_col, vec_col).mapInPandas(
-        scan_batches, "query_id long, neighbor_id long, cos_sim double")
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(),
-                                               F.col("neighbor_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select("query_id", "neighbor_id",
-                    F.round("cos_sim", 6).alias("cos_sim")))
+    cols = ("query_id", "neighbor_id", "cos_sim")
+    # queries are the broadcast side, corpus batches the candidates
+    local = _broadcast_scan(
+        corpus, queries, id_col, vec_col,
+        lambda c_ids, c, q_ids, q: _chunked_topk_rows(q_ids, q, c_ids, c, k,
+                                                      cols),
+        "query_id long, neighbor_id long, cos_sim double")
+    return _window_topk(local, "query_id", "cos_sim", k)
 
 
 def knn_blocked_twosided(emb: DataFrame, id_col: str = "vec_id",
                          vec_col: str = "embedding", k: int = 1,
                          n_blocks: int = 4) -> DataFrame:
-    """Exact top-k when NEITHER side fits in executor memory.
-
-    Plan: hash both sides into ``n_blocks`` deterministic blocks, pair
-    every query block with every candidate block (n_blocks² pairs — a
-    bounded *block-id* cross join, never a row cross join), run one
-    numpy matmul per pair via cogrouped applyInPandas, then reduce the
-    per-pair local top-k to a global top-k per query id with one
-    window. Shuffle volume is n_blocks× the data (each side replicated
-    across its pairings), traded against per-task memory of
-    |block_q| × |block_c| similarities.
-
-    Same exact results as knn_blocked / knn_bruteforce.
-    """
-    spark = emb.sparkSession
-    base = emb.select(F.col(id_col).alias("vec_id"),
-                      F.col(vec_col).alias("_v"),
-                      F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("_blk"))
-    pairs_q = spark.range(n_blocks).selectExpr("id AS _qb") \
-        .crossJoin(spark.range(n_blocks).selectExpr("id AS _cb"))
-    pairs_c = spark.range(n_blocks).selectExpr("id AS _qb2") \
-        .crossJoin(spark.range(n_blocks).selectExpr("id AS _cb2"))
-    q_side = (base.join(pairs_q, F.col("_blk") == F.col("_qb"))
-              .select("vec_id", "_v", "_qb", "_cb"))
-    # Candidates replicate once per query block they meet (inherent to
-    # the pairing); cogroup keys must match on both sides: (_qb, _cb).
-    c_side = (base.join(pairs_c, F.col("_blk") == F.col("_cb2"))
-              .select(F.col("vec_id").alias("nbr_id"), F.col("_v").alias("_cv"),
-                      F.col("_qb2").alias("_qb"), F.col("_cb2").alias("_cb")))
-
-    def block_topk(q_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(q_pdf) == 0 or len(c_pdf) == 0:
-            return pd.DataFrame(columns=["vec_id", "neighbor_id", "cos_sim"])
-        q_ids = q_pdf["vec_id"].to_numpy()
-        c_ids = c_pdf["nbr_id"].to_numpy()
-        q = np.array(q_pdf["_v"].tolist(), dtype=np.float64)
-        c = np.array(c_pdf["_cv"].tolist(), dtype=np.float64)
-        q /= np.linalg.norm(q, axis=1, keepdims=True)
-        c /= np.linalg.norm(c, axis=1, keepdims=True)
-        rows = _chunked_topk_rows(q_ids, q, c_ids, c, k)
-        return pd.DataFrame(rows, columns=["vec_id", "neighbor_id", "cos_sim"])
-
-    local = (q_side.groupBy("_qb", "_cb")
-             .cogroup(c_side.groupBy("_qb", "_cb"))
-             .applyInPandas(lambda ql, cl: block_topk(ql, cl),
-                            "vec_id long, neighbor_id long, cos_sim double"))
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(),
-                                             F.col("neighbor_id"))
-    return (local.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select("vec_id", "neighbor_id",
-                    F.round("cos_sim", 6).alias("cos_sim")))
+    """Exact top-k when NEITHER side fits in executor memory:
+    ``_cogroup_block_pairs`` over all ORDERED block pairs, the kernel's
+    local top-k per pair, then one window reduces them to the global
+    top-k per query id. Same exact results as knn_blocked."""
+    local = _cogroup_block_pairs(
+        emb, id_col, vec_col, n_blocks, False,
+        lambda q_ids, q, c_ids, c, _same_rows: _chunked_topk_rows(
+            q_ids, q, c_ids, c, k),
+        KNN_SCHEMA)
+    return _window_topk(local, "vec_id", "cos_sim", k)
 
 
 def mmr_select(rel: "np.ndarray", sims: "np.ndarray", k: int,

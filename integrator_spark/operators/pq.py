@@ -51,7 +51,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .knn import _collect_matrix, _dot_expr
+from .ivf import bounded_sample_matrix
+from .knn import _dot_expr, unit_rows
 
 
 def _train_codebook(mat: np.ndarray, m: int, ksub: int, iters: int,
@@ -85,20 +86,6 @@ def _train_codebook(mat: np.ndarray, m: int, ksub: int, iters: int,
                     n_empty += 1
         codebook[j, :k] = cent
     return codebook
-
-
-def _bounded_sample_matrix(emb: DataFrame, sample_rows: int,
-                           id_col: str, vec_col: str) -> np.ndarray:
-    """Deterministic modulo-on-id sample collected as an L2-normalized
-    float64 matrix — the shared bounded-collect contract of every
-    trainer in the vector family (≤ sample_rows × dim on the driver).
-    Delegates to ivf.bounded_sample_matrix (single definition of the
-    sampling rule — callers fusing several trainers collect it once)."""
-    from .ivf import bounded_sample_matrix
-    try:
-        return bounded_sample_matrix(emb, sample_rows, id_col, vec_col)
-    except ValueError:
-        raise ValueError("pq_train: empty input DataFrame") from None
 
 
 #: ADC scores are quantized to this grid (2^-40 ≈ 9e-13) before ANY
@@ -164,7 +151,7 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16,
     ``sample_mat`` (a precollected bounded sample) skips the count +
     collect passes — see train_centroids for the fusion contract."""
     mat = (sample_mat if sample_mat is not None
-           else _bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
+           else bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
     return _train_codebook(mat, m, ksub, iters, seed)
 
 
@@ -190,10 +177,7 @@ def pq_encode(emb: DataFrame, codebook: np.ndarray,
         m, _ksub, dsub = cb.shape
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
+            v = unit_rows(pdf[vec_col])
             codes = np.empty((len(v), m), dtype=np.uint8)
             for j in range(m):
                 sub = v[:, j * dsub:(j + 1) * dsub]
@@ -286,10 +270,7 @@ def _adc_scan_broadcast(codes: DataFrame, queries: DataFrame,
     qpdf = (queries.select(F.col(id_col).alias("query_id"), vec_col)
             .toPandas())
     qids = qpdf["query_id"].to_numpy()
-    qv = np.array(qpdf[vec_col].tolist(), dtype=np.float64)
-    qn = np.linalg.norm(qv, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qv = qv / qn
+    qv = unit_rows(qpdf[vec_col])
     m, ksub, dsub = codebook.shape
     # LUT[q, j, c] = q_sub_j · centroid_jc ; summed over j it is the
     # ADC approximation of cos(q, x) for any code row x.
@@ -394,10 +375,7 @@ def _adc_scan_blocked(codes: DataFrame, queries: DataFrame,
     def mk_lut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
+            v = unit_rows(pdf[vec_col])
             # Ship the normalized query vector, not the m x ksub LUT:
             # the LUT is 8x wider at the default dials AND replicates
             # x n_code_blocks onto the grid — block_adc recomputes it
@@ -487,11 +465,8 @@ def _exact_rerank(short: DataFrame, base: DataFrame, queries: DataFrame,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                n = np.linalg.norm(v, axis=1, keepdims=True)
-                n[n == 0] = 1.0
                 yield pd.DataFrame({"_id": pdf[id_col].to_numpy(),
-                                    col_alias: list(v / n)})
+                                    col_alias: list(unit_rows(pdf[vec_col]))})
         return norm_rows
 
     bnorm = (base.select(id_col, vec_col)
@@ -529,7 +504,7 @@ def ivfpq_train(emb: DataFrame, centroids: np.ndarray, m: int = 8,
     to train the coarse centroids, so passing it here removes two full
     corpus passes per index build."""
     mat = (sample_mat if sample_mat is not None
-           else _bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
+           else bounded_sample_matrix(emb, sample_rows, id_col, vec_col))
     assign = (mat @ centroids.T).argmax(axis=1)
     return _train_codebook(mat - centroids[assign], m, ksub, iters, seed)
 
@@ -560,10 +535,7 @@ def ivfpq_encode(emb: DataFrame, centroids: np.ndarray,
         m, _ksub, dsub = cb.shape
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
+            v = unit_rows(pdf[vec_col])
             sims = v @ cent.T
             na = min(n_assign, cent.shape[0])
             buckets = (sims.argmax(axis=1)[:, None] if na == 1
@@ -633,10 +605,7 @@ def ivfpq_search(codes: DataFrame, base: DataFrame, queries: DataFrame,
         cent, cb = bc.value
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(v, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            v = v / norms
+            v = unit_rows(pdf[vec_col])
             sims = v @ cent.T
             probes = np.argsort(-sims, axis=1)[:, :n_probe]
             reps = probes.shape[1]

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, table_bytes
 from ..operators.dedup import (
     _cosine_residual,
     exact_dedup_keep_first,
@@ -586,11 +586,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-scan operator: broadcast blocked-matmul under the budget,
     two-sided cogrouped blocks above it — exact results, no O(n²)
     shuffle and no unconditional driver-side matrix collect."""
-    from .vectors import _emb_cells_estimate
-
     e = load_table(spark, sf_dir, "embeddings")
-    return cosine_pairs_exact(e, threshold=0.45,
-                              est_cells=_emb_cells_estimate(sf_dir))
+    nb = table_bytes(sf_dir, "embeddings")
+    return cosine_pairs_exact(e, threshold=0.45, est_cells=nb and nb // 4)
 
 
 _CLUSTER_ORACLE = """
@@ -1050,9 +1048,8 @@ def dedup_embedding_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-private sketches get)."""
     from ..operators.dedup import signlsh_pairs
     e = load_table(spark, sf_dir, "embeddings")
-    from .vectors import _emb_cells_estimate
-    exact = (cosine_pairs_exact(e, threshold=0.45,
-                                est_cells=_emb_cells_estimate(sf_dir))
+    nb = table_bytes(sf_dir, "embeddings")
+    exact = (cosine_pairs_exact(e, threshold=0.45, est_cells=nb and nb // 4)
              .select("id_a", "id_b"))
     lsh = (signlsh_pairs(e, threshold=0.45, dim=64,
                          bits_per_band=3, n_bands=12)
@@ -1153,10 +1150,9 @@ def dedup_semantic_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (a.join(b, "bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct())
-    from .vectors import _emb_cells_estimate
+    nb = table_bytes(sf_dir, "embeddings")
     return (_cosine_residual(cand, e, e, 0.45, "id_a", "id_b",
-                             "vec_id", "embedding",
-                             est_cells=_emb_cells_estimate(sf_dir))
+                             "vec_id", "embedding", est_cells=nb and nb // 4)
             .orderBy("id_a", "id_b"))
 
 
@@ -1167,13 +1163,12 @@ def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine pair set (same 0.45 threshold). Registered so the driver
     sees the measured number every round; tests pin it >= 0.9."""
     from ..operators.dedup import semantic_pairs_ivf
-    from .vectors import _emb_cells_estimate
     e = load_table(spark, sf_dir, "embeddings")
     if not e.head(1):
         return spark.createDataFrame(
             [], "n_exact long, n_ivf long, n_hit long, recall double")
-    exact = (cosine_pairs_exact(e, threshold=0.45,
-                                est_cells=_emb_cells_estimate(sf_dir))
+    nb = table_bytes(sf_dir, "embeddings")
+    exact = (cosine_pairs_exact(e, threshold=0.45, est_cells=nb and nb // 4)
              .select("id_a", "id_b"))
     ivf = (semantic_pairs_ivf(e, threshold=0.45)
            .select("id_a", "id_b"))

@@ -2433,8 +2433,9 @@ def scale_sentinel_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     path's parallel-speedup probe (the hash sentinel covers codegen,
     the pairs sentinel the candidate-verify CPU). Scoring arithmetic
     and the grid-before-select tie-break are
-    operators/knn._chunked_topk_rows — the same kernel vec_knn's
-    oracle-verified route uses. The oracle exploits that replicas are
+    operators/knn._chunked_topk_rows — the one kernel behind every
+    exact kNN plan, including both of vec_knn's oracle-verified routes
+    (broadcast and two-sided). The oracle exploits that replicas are
     identical point sets and the constant id offset preserves id
     order: per-replica top-1 == base top-1 shifted, so DuckDB computes
     the base scan once and expands — the ENGINE still does the full
@@ -2446,7 +2447,7 @@ def scale_sentinel_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel signal)."""
     import pandas as pd
 
-    from ..operators.knn import _chunked_topk_rows
+    from ..operators.knn import _chunked_topk_rows, unit_rows
 
     e = load_table(spark, sf_dir, "embeddings")
     rep = (e.repartition(spark.sparkContext.defaultParallelism)
@@ -2465,12 +2466,11 @@ def scale_sentinel_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        rows = _chunked_topk_rows(ids, mat, ids, mat, k=1)
-        micros = sum(int(math.floor(c * 1e6 + 0.5)) for _, _, c in rows)
+        mat = unit_rows(pdf["embedding"])
+        sims = _chunked_topk_rows(ids, mat, ids, mat, k=1)["cos_sim"]
+        micros = sum(int(math.floor(c * 1e6 + 0.5)) for c in sims)
         return pd.DataFrame({"rep": [int(key[0])],
-                             "n_vecs": [len(rows)],
+                             "n_vecs": [len(sims)],
                              "sum_cos_micros": [micros]})
 
     return (rep.groupBy("rep")

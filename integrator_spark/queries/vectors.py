@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.num import DEC
-from ..io import load_table
+from ..io import load_table, table_bytes
 from ..operators.knn import knn_blocked, knn_bruteforce, knn_exact
 from ..registry import register
 
@@ -42,25 +42,11 @@ def vec_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-pair shuffle at fixture scale. Deterministic smallest-id
     tie-break either way."""
     e = load_table(spark, sf_dir, "embeddings")
-    return knn_exact(e, k=1, est_cells=_emb_cells_estimate(sf_dir))
-
-
-def _emb_cells_estimate(sf_dir: str) -> int | None:
-    """Route-from-metadata estimate of embeddings matrix cells
-    (rows × dims): parquet float32 payload is ~4 bytes/cell, so
-    bytes/4 OVER-estimates cells (encoding overhead only adds bytes) —
-    a conservative broadcast-budget check with zero Spark jobs."""
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return None          # non-local store: fall back to the stats job
-    return size // 4
+    # Route from metadata with zero jobs: float32 parquet is ~4 bytes a
+    # cell, so bytes // 4 over-estimates cells (a conservative budget
+    # check); None (a non-local store) falls back to the stats job.
+    nb = table_bytes(sf_dir, "embeddings")
+    return knn_exact(e, k=1, est_cells=nb and nb // 4)
 
 
 @register("vec_knn_bruteforce", oracle=_KNN_ORACLE, tags=("vector", "knn"))
@@ -145,8 +131,8 @@ def vec_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-visible face of which is ``vec_ann_lsh_adaptive`` below.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    return _signlsh_ann_top1(e, bits_per_band=3,
-                             est_cells=_emb_cells_estimate(sf_dir))
+    nb = table_bytes(sf_dir, "embeddings")
+    return _signlsh_ann_top1(e, bits_per_band=3, est_cells=nb and nb // 4)
 
 
 def _signlsh_ann_top1(e: DataFrame, bits_per_band: int,
@@ -210,9 +196,10 @@ def vec_ann_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     bits = signlsh_adaptive_bits(e.count())
+    nb = table_bytes(sf_dir, "embeddings")
     return _signlsh_ann_top1(e, bits_per_band=bits,
                              n_bands=signlsh_ann_bands(bits),
-                             est_cells=_emb_cells_estimate(sf_dir))
+                             est_cells=nb and nb // 4)
 
 
 # The recall arithmetic itself is oracle-checked: DuckDB replays the
@@ -443,7 +430,8 @@ def vec_knn5(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises the k>1 partial-sort branch of the operator against the
     oracle (vec_knn covers k=1)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return knn_exact(e, k=5, est_cells=_emb_cells_estimate(sf_dir))
+    nb = table_bytes(sf_dir, "embeddings")
+    return knn_exact(e, k=5, est_cells=nb and nb // 4)
 
 
 @register("vec_ann_graph", oracle=None, tags=("vector", "knn", "approx",

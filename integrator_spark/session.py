@@ -97,18 +97,11 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def build_session(app_name: str = "integrator-spark",
-                  cpus: int | None = None,
-                  shuffle_partitions: int | None = None) -> SparkSession:
-    """Build a local session sized for the fixture scale factors.
-
-    On a real cluster the same code runs unchanged; only master/memory
-    sizing differs. ``spark.sql.shuffle.partitions`` defaults to the
-    local core count — at cluster scale you would leave AQE to coalesce
-    from a larger initial number (or set 2-3x total cores).
-    """
+def _builder(app_name: str, cpus: int | None):
+    """The local-session builder both entry points share: master sized
+    to ``cpus`` (default ``SPARK_GRAFT_CPUS``, else the core count),
+    driver memory, and every ``RUNTIME_CONFS`` entry preset."""
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or cpus
     # Before the JVM (and its Python-worker daemons) launch: see
     # integrator_spark.__init__._disable_numpy_thp_madvise — workers
     # inherit this env, so numpy in every worker skips the THP
@@ -117,7 +110,6 @@ def build_session(app_name: str = "integrator-spark",
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -128,15 +120,31 @@ def build_session(app_name: str = "integrator-spark",
     )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)
+    return b
+
+
+def _start(b) -> SparkSession:
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
 
+def build_session(app_name: str = "integrator-spark",
+                  cpus: int | None = None) -> SparkSession:
+    """Build a local session sized for the fixture scale factors.
+
+    On a real cluster the same code runs unchanged; only master/memory
+    sizing differs. ``spark.sql.shuffle.partitions`` comes from
+    ``RUNTIME_CONFS`` (32, sized for the local fixtures) — at cluster
+    scale you would leave AQE to coalesce from a larger initial number
+    (or set 2-3x total cores).
+    """
+    return _start(_builder(app_name, cpus))
+
+
 def build_durable_session(warehouse_dir: str,
                           app_name: str = "integrator-spark-durable",
-                          cpus: int | None = None,
-                          shuffle_partitions: int | None = None) -> SparkSession:
+                          cpus: int | None = None) -> SparkSession:
     """Like :func:`build_session`, but with a PERSISTENT catalog: table
     metadata (including bucketing specs) lives in an embedded Derby
     metastore under ``warehouse_dir``, so a ``saveAsTable(bucketBy)``
@@ -154,25 +162,12 @@ def build_durable_session(warehouse_dir: str,
     Cross-session behavior is proven in tests/test_bucketing.py
     (two separate driver processes, zero-Exchange assert in the second).
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or cpus
     wh = os.path.abspath(warehouse_dir)
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
+    return _start(
+        _builder(app_name, cpus)
         .config("spark.sql.warehouse.dir", wh)
         # Embedded Derby db colocated with the warehouse: the metastore
         # travels with the data directory, nothing global is touched.
         .config("javax.jdo.option.ConnectionURL",
                 f"jdbc:derby:;databaseName={wh}/metastore_db;create=true")
-        .enableHiveSupport()
-    )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+        .enableHiveSupport())

@@ -142,6 +142,29 @@ def test_q_chunks_bound_sims_buffer():
     assert list(_q_chunks(0, 10)) == []
 
 
+def test_topk_cells_matches_per_row_reference():
+    """The kernel's vectorized selection equals a per-row sort by
+    (sim DESC, column ASC) over the finite cells, on grids dense with
+    ties and with whole -inf rows (no finite candidate -> no output)."""
+    import numpy as np
+
+    from integrator_spark.operators.knn import _topk_cells
+
+    rng = np.random.default_rng(3)
+    for _ in range(200):
+        rows, width = int(rng.integers(1, 12)), int(rng.integers(1, 12))
+        sims = rng.integers(-3, 4, size=(rows, width)) / 4.0
+        sims[rng.random((rows, width)) < 0.2] = -np.inf
+        sims[rng.random(rows) < 0.1] = -np.inf
+        for k in range(1, width + 1):
+            want = [(r, j) for r in range(rows)
+                    for j in sorted((j for j in range(width)
+                                     if sims[r, j] > -np.inf),
+                                    key=lambda j: (-sims[r, j], j))[:k]]
+            r, j = _topk_cells(sims, k)
+            assert list(zip(r.tolist(), j.tolist())) == want
+
+
 def test_knn_exact_routes_to_twosided_plan(spark):
     """Above the cell budget knn_exact must select the cogrouped
     two-sided physical plan (FlatMapCoGroupsInPandas), and below it the
@@ -247,6 +270,43 @@ def test_knn_blocked_tie_break_matches_bruteforce(spark):
     for k in (1, 2, 3):
         assert key(knn_blocked(emb, k=k).collect()) == \
             key(knn_bruteforce(emb, k=k).collect())
+
+
+def test_knn_routes_agree_on_degenerate_corpora(spark):
+    # Every exact route runs one kernel, so degenerate corpora cannot
+    # drift between plans: a zero-norm row scores cosine 0 (never NaN)
+    # on both routes, and a 1-row corpus has no neighbor on any route
+    # (never the masked self-pair). knn_bruteforce is not compared: it
+    # divides by the zero norm in SQL.
+    import math
+
+    from integrator_spark.operators.knn import (knn_blocked_twosided,
+                                                knn_exact,
+                                                knn_search_broadcast)
+
+    schema = "vec_id long, embedding array<float>"
+
+    def routes(emb, k):
+        # 2 cells is under any corpus here -> two-sided; 10**6 -> broadcast
+        return {"broadcast": knn_exact(emb, k=k, max_broadcast_cells=10**6),
+                "twosided": knn_exact(emb, k=k, max_broadcast_cells=2)}
+
+    zero = spark.createDataFrame(
+        [(0, [0.0] * 4), (1, [1.0, 2.0, 3.0, 4.0]),
+         (2, [4.0, 3.0, 2.0, 1.0]), (3, [1.0, 0.0, 1.0, 0.0])], schema)
+    for k in (1, 2):
+        got = {name: sorted(map(tuple, df.collect()))
+               for name, df in routes(zero, k).items()}
+        assert got["broadcast"] == got["twosided"]
+        assert len(got["broadcast"]) == 4 * k
+        assert not any(math.isnan(s) for _, _, s in got["broadcast"])
+
+    one = spark.createDataFrame([(7, [1.0, 2.0, 3.0, 4.0])], schema)
+    for k in (1, 2):
+        plans = [*routes(one, k).values(), knn_blocked(one, k=k),
+                 knn_blocked_twosided(one, k=k, n_blocks=2),
+                 knn_search_broadcast(one, one, k=k)]
+        assert all(df.collect() == [] for df in plans)
 
 
 def test_pipeline_validates_and_publishes(spark, tmp_path):
