@@ -140,14 +140,14 @@ def etl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import IntegrationPipeline
 
     e = load_table(spark, sf_dir, "events")
-    if e.isEmpty():   # empty batch: publish step writes no data files
-        return spark.createDataFrame(
-            [], "canonical string, n_rows long, total_value double")
     pipe = IntegrationPipeline(spark, rules=EVENT_RULES,
                                src_col="event_type", batch_id="b1",
                                key_cols=["event_id", "user_id"])
     sink = derived_dir(sf_dir, "published_events")
     result = pipe.run(e, sink)
+    if result.n_published == 0:   # empty batch: publish wrote no data files
+        return spark.createDataFrame(
+            [], "canonical string, n_rows long, total_value double")
     published = spark.read.parquet(result.published_path)
     return (published.groupBy(F.col("canonical").cast("string").alias("canonical"))
             .agg(F.count(F.lit(1)).alias("n_rows"),

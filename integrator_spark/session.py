@@ -39,6 +39,15 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.shuffle.partitions": "32",
 }
 
+#: Above 32 paths Spark lists directories in a parallel job of
+#: ``min(paths, parallelism)`` tasks, and the default parallelism of
+#: 10000 means one task per directory: reading a 400-partition output
+#: launched 400 listing tasks, each listing one directory. Both session
+#: paths set it to one task per core, which keeps the listing parallel
+#: on a cluster without paying a task launch per directory. The value
+#: depends on the running context, so it is not in ``RUNTIME_CONFS``.
+LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
@@ -85,6 +94,8 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             # Conf not recognized/settable on this build — non-fatal.
             pass
+    spark.conf.set(LISTING_PARALLELISM,
+                   str(spark.sparkContext.defaultParallelism))
     try:
         _ship_package(spark)
     except Exception:
@@ -112,6 +123,11 @@ def _builder(app_name: str, cpus: int | None):
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # local[cpus] has cpus as its default parallelism. Set as a
+        # builder option because a conf.set right after start would
+        # build the session state (~0.9 s) at start-up instead of at
+        # the first query.
+        .config(LISTING_PARALLELISM, str(cpus))
         .config("spark.sql.parquet.filterPushdown", "true")
         # Cluster posture for the same THP guard (inert in local mode,
         # where workers inherit the driver env set above).

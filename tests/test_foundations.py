@@ -173,3 +173,14 @@ def test_etl_backfill_leaves_other_partitions_untouched(spark, tmp_path):
            for r in spark.read.parquet(target).collect()}
     assert got == {("2024-01-01", 1), ("2024-01-02", 20),
                    ("2024-01-03", 3)}
+
+
+def test_sessions_list_partitions_with_one_task_per_core(spark):
+    from integrator_spark.session import LISTING_PARALLELISM, ensure_runtime_confs
+    cores = str(spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(LISTING_PARALLELISM) == cores      # build_session
+    # a session built elsewhere, without our builder options
+    fresh = spark.newSession()
+    fresh.conf.unset(LISTING_PARALLELISM)
+    assert fresh.conf.get(LISTING_PARALLELISM) != cores
+    assert ensure_runtime_confs(fresh).conf.get(LISTING_PARALLELISM) == cores

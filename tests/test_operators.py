@@ -321,8 +321,52 @@ def test_pipeline_validates_and_publishes(spark, tmp_path):
     assert res.validation["unmapped_values"] == 2  # bogus + NULL source
     assert res.validation["null_key_id"] == 0
     assert not res.is_valid
+    # strict mode refuses before writing anything
     with pytest.raises(ValueError, match="unmapped"):
         pipe.run(df, str(tmp_path / "out2"), allow_unmapped=False)
+    assert not (tmp_path / "out2").exists()
+    clean = pipe.run(df.filter(F.col("ev") == "click"),
+                     str(tmp_path / "out3"), allow_unmapped=False)
+    assert clean.n_published == 1 and clean.is_valid
+
+
+def test_pipeline_publish_layout_and_observed_counts(spark, tmp_path):
+    # A multi-split input still publishes one file per code (unmapped
+    # included), and the counts observed during the write equal a
+    # re-read of the sink.
+    from integrator_spark.pipeline import IntegrationPipeline
+    evs = ["click", "view", "buy", "bogus", None]
+    rows = [(None if i % 11 == 0 else i, evs[i % len(evs)], float(i))
+            for i in range(60)]
+    df = spark.createDataFrame(rows, "id long, ev string, v double").repartition(4)
+    pipe = IntegrationPipeline(
+        spark, rules=[("click", "interaction", "R1"), ("view", "interaction", "R2"),
+                      ("buy", "transaction", "R3")],
+        src_col="ev", batch_id="t1", key_cols=["id"])
+    sink = tmp_path / "out"
+    res = pipe.run(df, str(sink))
+    files = sorted(p.parent.name for p in sink.glob("canonical=*/*.parquet"))
+    assert files == ["canonical=__unmapped__", "canonical=interaction",
+                     "canonical=transaction"]
+    pub = spark.read.parquet(str(sink))
+    assert res.n_published == pub.count() == 60
+    assert res.validation == {
+        "unmapped_values": pub.filter(F.col("canonical") == "__unmapped__").count(),
+        "null_canonical": pub.filter(F.col("canonical").isNull()).count(),
+        "null_key_id": pub.filter(F.col("id").isNull()).count(),
+    } == {"unmapped_values": 24, "null_canonical": 0, "null_key_id": 6}
+
+
+def test_pipeline_publishes_empty_batch(spark, tmp_path):
+    from integrator_spark.pipeline import IntegrationPipeline
+    df = spark.createDataFrame([], "id long, ev string, v double")
+    pipe = IntegrationPipeline(spark, rules=[("click", "interaction", "R1")],
+                               src_col="ev", batch_id="t1", key_cols=["id"])
+    res = pipe.run(df, str(tmp_path / "out"))
+    assert res.n_published == 0
+    assert res.validation == {"unmapped_values": 0, "null_canonical": 0,
+                              "null_key_id": 0}
+    assert res.is_valid
 
 
 def test_asof_pandas_variant_matches_window_variant(spark):
